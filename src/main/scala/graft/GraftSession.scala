@@ -76,106 +76,80 @@ object GraftSession {
     }
   }
 
-  /** Drop every cached model snapshot (data-change escape hatch).
-    * Also deletes the temp parquet dirs cachedArtifact wrote (ADVICE
-    * r18: clearing only the memo orphaned them on disk).
+  /** Drop every cached model snapshot and artifact memo (data-change
+    * escape hatch), and delete the session artifact root — never a
+    * configured index root, whose artifacts outlive the session.
     */
   def invalidateModels(): Unit = {
     models.clear()
-    sweepArtifacts()
+    sweepSessionRoot()
   }
 
-  /** Memoized PARQUET artifact (round 18 — VERDICT r17 task 5):
-    * [[cachedModel]] for results too big for driver memory. `build`
-    * runs once per (artifactId, dir) per session, writing its frames
-    * under a fresh temp directory whose path is the memoized value;
-    * consumers re-read the parquet — which survives [[release]] (disk,
-    * not executor storage) exactly like the driver-side model cache.
-    * First shipped use: the degree-6 k-NN graph the four graph-ANN
-    * queries each rebuilt from vectors (27.9-62.1 s EACH at 100×) now
-    * builds once per session per data dir; at 100 TB the same artifact
-    * is the persisted index a deployment maintains incrementally
-    * ([[graft.streaming.StreamingOps.knnGraphMaintained]]).
+  /** Memoized PARQUET artifact: [[cachedModel]] for results too big
+    * for driver memory (the degree-6 k-NN graph, trained quantizer
+    * parts, shared graph edge scans). The artifact is path-addressed
+    * and params-pinned via [[graft.operators.ArtifactStore.pinned]]
+    * under the index root — `spark.graft.indexDir` conf, else the
+    * `GRAFT_INDEX_DIR` env var, else a per-session temp root
+    * (`graft_art_session*` under java.io.tmpdir). Every case runs the
+    * same disjoint-root check, source fingerprint, staged build,
+    * params file and atomic rename: `build` writes its frames under
+    * the path it is given and consumers re-read the committed
+    * `<root>/<artifactId>/src=<fingerprint>` dir, which survives
+    * [[release]] (disk, not executor storage).
     *
-    * Determinism contract: `build` must be a pure function of the data
-    * under `dir` and write only exact-typed columns (ints/longs/
-    * strings/float arrays land bit-identical after a parquet round
-    * trip), so a cache hit is indistinguishable from a rebuild. A
-    * crashed build memoizes nothing (the FutureTask evicts) — the next
-    * caller rebuilds into a FRESH directory, so no torn artifact is
-    * ever read. Corollary of the purity contract (ADVICE r18): if the
-    * data under `dir` MUTATES mid-session the memoized artifact is
-    * silently stale, exactly like a cachedModel snapshot — call
-    * [[invalidateModels]] after any in-place data change (immutable
-    * test/bench dirs make the default safe).
+    * With a configured root a cold NEW session re-reads the parquet
+    * instead of re-running the build; params divergence refuses
+    * loudly; a mutated/different source dir fingerprints to a
+    * different address (fresh build, never a stale read). The session
+    * root is deleted by [[invalidateModels]] and at JVM exit, so the
+    * next session pays one warmup build — the measured-bench shape.
     *
-    * Disk lifecycle (ADVICE r18): the temp directories are tracked and
-    * deleted by [[invalidateModels]] and by a JVM shutdown hook — a
-    * session that touches many (artifactId, dir) pairs no longer
-    * orphans index copies in the temp filesystem.
-    */
-  def cachedArtifact(artifactId: String, dir: String)
-      (build: String => Unit): String =
-    cachedModel[String](artifactId, dir) {
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft_art_$artifactId").toString
-      build(path)
-      artifactDirs.add(path)
-      path
-    }
-
-  /** DURABLE form of [[cachedArtifact]] (round 19 — VERDICT r18
-    * task 1): when an index root is configured (`spark.graft.indexDir`
-    * conf, else the `GRAFT_INDEX_DIR` env var) the artifact is
-    * path-addressed and params-pinned under it via
-    * [[graft.operators.ArtifactStore.pinned]] — a cold NEW session
-    * resolves the same `<root>/<artifactId>/src=<fingerprint>` path
-    * and re-reads the parquet instead of re-running the n^1.5 build;
-    * params divergence refuses loudly; a mutated/different source dir
-    * fingerprints to a different address (fresh build, never a stale
-    * read). With no root configured this falls back to the
-    * session-temp [[cachedArtifact]] — the measured-bench shape, where
-    * each session pays one warmup build.
-    *
-    * The session memo still fronts the store (one fingerprint listing
-    * + params validation per (artifactId, dir) per session).
+    * `build` must be a pure function of the data under `dir` and
+    * write only exact-typed columns, so a hit is indistinguishable
+    * from a rebuild. The session memo, keyed by resolved root, fronts
+    * the store: one fingerprint listing + params check per
+    * (artifactId, dir, root) per session, and changing the root
+    * mid-session resolves against the new one. The memo does not
+    * re-fingerprint: after an in-place data change mid-session, call
+    * [[invalidateModels]].
     */
   def pinnedArtifact(spark: SparkSession, artifactId: String, dir: String,
-      params: Seq[(String, String)])(build: String => Unit): String =
-    indexRoot(spark) match {
-      case None => cachedArtifact(artifactId, dir)(build)
-      case Some(root) => cachedModel[String](s"pinned:$artifactId", dir) {
-        // a root nested inside the fingerprinted dir would re-address
-        // on every commit (ADVICE r19) — refuse before fingerprinting
-        graft.operators.ArtifactStore.requireDisjointRoot(spark, root, dir)
-        val fp = graft.operators.ArtifactStore.sourceFingerprint(spark, dir)
-        graft.operators.ArtifactStore.pinned(spark, root, artifactId, fp,
-          params :+ ("source" -> fp))(build)
-      }
+      params: Seq[(String, String)])(build: String => Unit): String = {
+    val root = indexRoot(spark).getOrElse(sessionRoot())
+    cachedModel[String](s"artifact:$artifactId@$root", dir) {
+      // a root nested inside the fingerprinted dir would re-address
+      // on every commit — refuse before fingerprinting
+      graft.operators.ArtifactStore.requireDisjointRoot(spark, root, dir)
+      val fp = graft.operators.ArtifactStore.sourceFingerprint(spark, dir)
+      graft.operators.ArtifactStore.pinned(spark, root, artifactId, fp,
+        params :+ ("source" -> fp))(build)
     }
+  }
 
   /** The configured durable-index root, if any (conf wins over env). */
   def indexRoot(spark: SparkSession): Option[String] =
     spark.conf.getOption("spark.graft.indexDir")
       .orElse(sys.env.get("GRAFT_INDEX_DIR")).filter(_.nonEmpty)
 
-  /** Temp artifact dirs owned by this session — swept on
-    * [[invalidateModels]] and JVM exit. Only paths cachedArtifact
-    * CREATED are ever deleted (never a pinned/user path).
+  /** The unconfigured-root fallback, created on first use and swept
+    * on [[invalidateModels]] and JVM exit.
     */
-  private val artifactDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private var sessionDir: Option[java.nio.file.Path] = None
   locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => sweepArtifacts()))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => sweepSessionRoot()))
   }
 
-  private def sweepArtifacts(): Unit = {
-    val it = artifactDirs.iterator()
-    while (it.hasNext) {
-      val p = it.next(); it.remove()
-      try deleteRecursively(java.nio.file.Paths.get(p))
-      catch { case _: java.io.IOException => () } // exit-time best effort
-    }
+  private def sessionRoot(): String = synchronized {
+    if (sessionDir.isEmpty) sessionDir = Some(
+      java.nio.file.Files.createTempDirectory("graft_art_session"))
+    sessionDir.get.toString
+  }
+
+  private def sweepSessionRoot(): Unit = synchronized {
+    try sessionDir.foreach(deleteRecursively)
+    catch { case _: java.io.IOException => () } // exit-time best effort
+    sessionDir = None
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {

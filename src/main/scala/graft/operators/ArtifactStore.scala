@@ -3,14 +3,15 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Durable, params-pinned index artifacts (round 19 — VERDICT r18
-  * task 1). [[graft.GraftSession.cachedArtifact]] amortizes an
-  * expensive deterministic build (the n^1.5 k-NN-graph edge build,
-  * trained quantizer parts, shared graph edge scans) WITHIN a session;
-  * this store makes the same artifact survive the session: a cold new
-  * process re-reads the parquet instead of re-running the build — the
-  * deployment shape, where the index is built (or stream-maintained)
-  * once and every consumer walks it.
+/** Path-addressed, params-pinned index artifacts — the one store
+  * behind [[graft.GraftSession.pinnedArtifact]]. An expensive
+  * deterministic build (the n^1.5 k-NN-graph edge build, trained
+  * quantizer parts, shared graph edge scans) runs once per address;
+  * under a configured index root the artifact survives the session,
+  * so a cold new process re-reads the parquet instead of re-running
+  * the build — the deployment shape, where the index is built (or
+  * stream-maintained) once and every consumer walks it. With no root
+  * configured the same code runs against a per-session temp root.
   *
   * Layout: `<root>/<artifactId>/src=<fingerprint>/` containing the
   * build's parquet output plus `_artifact_params` (key=value lines).

@@ -307,11 +307,8 @@ object Dedup {
       .localCheckpoint(eager = false)
     val edgeCount = edges.count()
     val labels: DataFrame =
-      if (edgeCount <= localEdgeThreshold) {
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"[cc] local union-find over $edgeCount edges")
-        localUnionFind(edges)
-      } else iterativeMinLabel(edges, maxIters)
+      if (edgeCount <= localEdgeThreshold) localUnionFind(edges)
+      else iterativeMinLabel(edges, maxIters)
     vertices
       .join(labels.withColumnRenamed("id", "__lid"),
         col("id") === col("__lid"), "left")
@@ -443,8 +440,6 @@ object Dedup {
       labels = next
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"[cc] converged after $iter rounds")
     // The returned frame is a materialized checkpoint: it no longer
     // references the edge frame, so the edges checkpoint is dead too.
     // (The small-graph path must NOT do this — localUnionFind's output
@@ -944,25 +939,12 @@ object Dedup {
           }
         spark.createDataset(swept).toDF("id")
       }
-      // stage timing behind the survivor-debug flag (driver-side
-      // stderr only — diagnosing which engine stage moves at scale)
-      val survDebug = sys.env.contains("GRAFT_SURV_DEBUG")
-      def timed[A](tag: String)(f: => A): A =
-        if (!survDebug) f
-        else {
-          val t0 = System.nanoTime; val v = f
-          // scalastyle:off println
-          System.err.println(
-            f"[foldengine] $tag ${(System.nanoTime - t0) / 1e9}%.2f s")
-          // scalastyle:on println
-          v
-        }
       // corpus sizes drive the path choice: batchN's count also
       // materializes the signature kernel into sigsB's persist (every
       // later consumer reads it), histN is a cached-state or parquet
       // count — both cheap relative to one band join
-      val batchN = timed("batchN")(sigsB.count())
-      val histN = timed("histN")(prev.map(_.count()).getOrElse(0L))
+      val batchN = sigsB.count()
+      val histN = prev.map(_.count()).getOrElse(0L)
       val dupIds: DataFrame = if (batchN == 0L) {
         spark.emptyDataset[Long].toDF("id").localCheckpoint(true)
       } else if (histN + batchN <= smallBatchDocs) {
@@ -986,10 +968,9 @@ object Dedup {
       // flagged-id frame is batch-bounded and is consumed twice (the
       // anti-join and the final decision union) — without it the
       // history scan runs twice per action.
-      val dupHist1 = timed("dupHist1")(histSurv.map(p =>
-        matchedVs(sigsB, p).localCheckpoint(true)))
-      if (timed("short-circuit check")(
-          dupHist1.exists(_.count() == batchN))) {
+      val dupHist1 = histSurv.map(p =>
+        matchedVs(sigsB, p).localCheckpoint(true))
+      if (dupHist1.exists(_.count() == batchN)) {
         // und1-empty short-circuit (round 18, VERDICT r17 task 2):
         // the survivor pass flagged EVERY batch doc, so the dup-pool
         // pass and all sweeps could only re-derive held flags. The
@@ -1032,10 +1013,9 @@ object Dedup {
       val sweepBase = if (anyRule) sigsB else undecided
       // anyRule's sweep base is the whole batch — reuse batchN
       // instead of paying another count job
-      val nUndecided = timed("nUndecided")(
-        if (anyRule) batchN else sweepBase.count())
+      val nUndecided = if (anyRule) batchN else sweepBase.count()
       val dupNew: DataFrame = if (nUndecided <= smallBatchDocs) {
-        timed("fastSweep")(singleTaskSweep(sweepRows(sweepBase, hist = false)))
+        singleTaskSweep(sweepRows(sweepBase, hist = false))
       } else {
       // ---- DISTRIBUTED PATH (undecided set beyond one task) ----
       // phase 2a: exact-signature clique collapse (the r10
@@ -1158,19 +1138,6 @@ object Dedup {
         .distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       internals += spanEdges
-      if (sys.env.contains("GRAFT_SURV_DEBUG")) {
-        // scalastyle:off println
-        def t[A](tag: String)(f: => A): Unit = {
-          val s = System.nanoTime
-          val v = f
-          System.err.println(s"[survfold] $tag = $v " +
-            f"(${(System.nanoTime - s) / 1e9}%.2f s)")
-        }
-        t("sigClasses")(sigClasses.count())
-        t("bucketSets")(bucketSets.count())
-        t("spanEdges")(spanEdges.count())
-        // scalastyle:on println
-      }
       // phase 3: components over the spanning forest (edge-incident
       // docs only — everyone else already survived). Components are
       // dup-class-sized (probed: max 200 members at 100x, vs the
@@ -1214,14 +1181,13 @@ object Dedup {
       // now materialized, so every internal frame and the phase-1
       // checkpoints can be released before the lazy state returns —
       // the fold retains exactly sigsB + this id list per batch
-      val ids = timed("dupIds checkpoint")(
-        (dupHist1.toSeq ++ dupHist2.toSeq :+ dupNew)
+      val ids = (dupHist1.toSeq ++ dupHist2.toSeq :+ dupNew)
         .reduce(_ unionByName _)
         // anyRule sweeps decide every batch doc, so a doc can carry
         // both a history flag and a sweep flag — the state join
         // multiplies rows on duplicate ids without this
         .distinct()
-        .localCheckpoint(true))
+        .localCheckpoint(true)
       internals.foreach(_.unpersist(false))
       dupHist1.foreach(dropCheckpoint)
       dupHist2.foreach(dropCheckpoint)

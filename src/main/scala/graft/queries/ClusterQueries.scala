@@ -18,13 +18,13 @@ import graft.operators.Clustering
   * replayable: centroid sums depend on addition order). The oracle
   * unrolls both Lloyd rounds as CTE pairs (assign_j, update_j).
   */
-object ClusterQueries {
+object ClusterQueries extends graft.QueryModule {
 
   private val K = 8
   private val Dim = 64
   private val Iters = 2
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ann_kmeans" -> { (s, dir) =>
       import s.implicits._
       val emb = Tables.load(s, dir, "embeddings")
@@ -74,7 +74,7 @@ object ClusterQueries {
        |    SELECT cid, list(nq ORDER BY pos) AS cv FROM u$j GROUP BY cid) u
        |  ON s.cid = u.cid)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "ann_kmeans" ->
       s"""WITH pts AS (
          |  SELECT vec_id, list_transform(embedding,

@@ -10,9 +10,9 @@ import graft.functions.GraftFunctions._
   * and per-source corpus statistics — built from the same portable
   * primitives as the text_* queries.
   */
-object CorpusQueries {
+object CorpusQueries extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // keep documents that pass the quality gate: enough tokens, sane
     // mean word length, some stopword signal
     "corpus_clean" -> { (s, dir) =>
@@ -122,7 +122,7 @@ object CorpusQueries {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "corpus_prepare" ->
       """WITH gated AS (
         |  SELECT doc_id, lang, text, n_tokens FROM (

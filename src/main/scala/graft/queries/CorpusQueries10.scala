@@ -41,9 +41,9 @@ import graft.Tables
   * category-bounded frames (sources, langs), a two-row union —
   * the corpus is scanned once per axis, nothing else.
   */
-object CorpusQueries10 {
+object CorpusQueries10 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "corpus_contamination_sem" -> { (s, dir) =>
       import s.implicits._
       val emb = Tables.load(s, dir, "embeddings")
@@ -112,7 +112,7 @@ object CorpusQueries10 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     // same gram derivation as corpus_contamination's oracle; per-bench
     // rollup over the hit join, LEFT-joined so clean bench docs keep
     // their zero row

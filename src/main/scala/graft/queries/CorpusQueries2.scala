@@ -10,9 +10,9 @@ import graft.Tables
   * remaining pretraining-pipeline staples. All-integer arithmetic so
   * the DuckDB oracle replays every assignment bit-for-bit.
   */
-object CorpusQueries2 {
+object CorpusQueries2 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // benchmark decontamination: flag training docs sharing 5-token
     // shingles with the held-out set (doc_id % 97 == 0 stands in for an
     // eval benchmark). Benchmark n-grams dedup + broadcast — the
@@ -61,7 +61,7 @@ object CorpusQueries2 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "corpus_contamination" ->
       """WITH grams AS (
         |  SELECT doc_id,

@@ -12,9 +12,9 @@ import graft.functions.GraftFunctions.token_count
   * All-integer selection logic (no RNG, no floats) so the DuckDB
   * oracle replays every decision bit-for-bit.
   */
-object CorpusQueries3 {
+object CorpusQueries3 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // mixture resampling: rebalance the corpus toward target source
     // ratios by deterministic per-language downsampling (en keeps
     // 1/4, de 1/2, the rest all) — the "data mixture" step of a
@@ -76,7 +76,7 @@ object CorpusQueries3 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "corpus_mixture" ->
       """SELECT lang, count(*) AS n_docs,
         |  CAST(sum(length(text) - length(replace(text, ' ', '')) + 1)

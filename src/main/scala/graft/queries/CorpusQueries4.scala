@@ -7,9 +7,9 @@ import graft.Tables
 /** Fourth corpus wave (SURVEY.md §2.3, round 4): substring-level
   * (span) deduplication — [[graft.operators.SpanDedup]].
   */
-object CorpusQueries4 {
+object CorpusQueries4 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // cross-document duplicate 5-gram span removal (Lee et al. 2022
     // substring dedup, relational form): tokens covered by any 5-gram
     // occurring in >= 2 distinct documents are dropped and the text is
@@ -129,7 +129,7 @@ object CorpusQueries4 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "corpus_span_dedup" ->
       """WITH ws AS (
         |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),

@@ -22,7 +22,7 @@ import graft.Tables
   * floor — the round-3 negative-numerator trap — so the <=W case is
   * split out as a literal 1 on both engines).
   */
-object CorpusQueries5 {
+object CorpusQueries5 extends graft.QueryModule {
 
   /** Window (tokens per chunk) and stride (tokens between chunk
     * starts); overlap = W - S. Values chosen so sf0.01 documents
@@ -40,7 +40,7 @@ object CorpusQueries5 {
   /** Fixed BM25 query terms (scored in this order). */
   private val BmTerms = Seq("query", "join", "data")
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "corpus_chunk" -> { (s, dir) =>
       import s.implicits._
       Tables.load(s, dir, "documents")
@@ -180,7 +180,7 @@ object CorpusQueries5 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "corpus_chunk" ->
       s"""WITH ws AS (
         |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),

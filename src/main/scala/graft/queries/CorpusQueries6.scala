@@ -25,7 +25,7 @@ import graft.Tables
   * rightmost-tie rule (a position-level concern) cannot affect the
   * output set.
   */
-object CorpusQueries6 {
+object CorpusQueries6 extends graft.QueryModule {
 
   private val K = 8   // winnowing k-gram length (chars)
   private val W = 16  // winnowing window (hashes)
@@ -33,7 +33,7 @@ object CorpusQueries6 {
   private val MergeRounds = 3 // corpus_bpe_merges fixed-depth contract
   private val Sep = "\u001f"  // symbol separator (chr(31)) — never in text
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "corpus_bpe" -> { (s, dir) =>
       import s.implicits._
       val words = Tables.load(s, dir, "documents")
@@ -289,7 +289,7 @@ object CorpusQueries6 {
        |  FROM (SELECT w, string_split(wstr, chr(31)) AS ss, freq
        |        FROM words${r - 1}), b$r)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "corpus_bpe_merges" -> {
       val rounds = (1 to MergeRounds).map(bpeRoundCte).mkString(",\n")
       val sel = (1 to MergeRounds).map(r =>

@@ -26,9 +26,9 @@ import graft.Tables
   * corpus; everything after operates on the 5-row language frame
   * (tiny-frame windows — the downsample-then-window rule).
   */
-object CorpusQueries7 {
+object CorpusQueries7 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // `corpus_shuffle_shards` — deterministic TRAINING-ORDER shuffle +
     // shard assignment (round 8), the export step between curation and
     // the data loader: global pseudo-random order from the committed
@@ -125,7 +125,7 @@ object CorpusQueries7 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "corpus_shuffle_shards" ->
       """WITH t AS (SELECT doc_id, lang,
         |    (doc_id * 2654435761) % 4294967296 AS priority

@@ -28,13 +28,13 @@ import graft.operators.Dedup
   * same exchange); zero-token docs are excluded up front (they can
   * neither spend budget nor be ranked).
   */
-object CorpusQueries8 {
+object CorpusQueries8 extends graft.QueryModule {
 
   // binds on this corpus: sources carry ~1300-1600 tokens at sf0.01,
   // so a 1000-token budget forces real selection (2000 selected all)
   private val Budget = 1000L
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "corpus_token_budget" -> { (s, dir) =>
       import s.implicits._
       val wts = TextQueries6.trainedWeights(s, dir)
@@ -194,7 +194,7 @@ object CorpusQueries8 {
   private def sqlCount(set: String) =
     s"len(list_filter(string_split(text, ' '), gw -> gw IN ($set)))"
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     // gw_doc only holds docs with >= 1 token, so the inner join IS the
     // n_toks > 0 filter
     "corpus_token_budget" ->

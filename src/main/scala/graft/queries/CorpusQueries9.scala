@@ -48,7 +48,7 @@ import graft.Tables
   * joins back postings-style, one per-doc rollup, and the tercile pass
   * is the RankSelect ladder — no low-cardinality window anywhere.
   */
-object CorpusQueries9 {
+object CorpusQueries9 extends graft.QueryModule {
 
   /** One bigram row per adjacent token pair (space split, docs with
     * >= 2 tokens), with doc/lang context.
@@ -132,7 +132,7 @@ object CorpusQueries9 {
       .drop("k1", "k2")
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "corpus_ppl_buckets" -> { (s, dir) =>
       import s.implicits._
       val docs = Tables.load(s, dir, "documents")
@@ -194,7 +194,7 @@ object CorpusQueries9 {
        |  GROUP BY b.doc_id, b.lang)""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "corpus_ppl_buckets" ->
       s"""WITH ${pplCtes("documents")},
          |sc AS (SELECT doc_id, lang, m, s_e,

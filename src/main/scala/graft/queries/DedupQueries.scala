@@ -14,9 +14,9 @@ import graft.operators.Dedup
   * (pigeonhole over bands) and empirically total for MinHash/sign-LSH at
   * the corpus' planted similarity levels (verified in CI by DedupSpec).
   */
-object DedupQueries {
+object DedupQueries extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dedup_exact" -> { (s, dir) =>
       Dedup.exact(Tables.load(s, dir, "documents"), "text", "doc_id")
     },
@@ -179,7 +179,7 @@ object DedupQueries {
     s"""$clustersCtePrefix
       |SELECT u AS doc_id, min(lbl) AS component FROM reach GROUP BY u""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "dedup_exact" ->
       """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
         |  count(*) AS n_copies, min(length(text)) AS n_chars

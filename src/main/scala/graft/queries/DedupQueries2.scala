@@ -27,7 +27,7 @@ import graft.operators.Dedup
   * result broadcasts back. No window over the low-cardinality cluster
   * key anywhere (the round-3 single-task-cliff lesson).
   */
-object DedupQueries2 {
+object DedupQueries2 extends graft.QueryModule {
 
   /** Cosine-to-centroid at or above this marks a semantic duplicate
     * (sf0.01 nearest-centroid quantiles: p50 0.19, p90 0.30 — 0.25
@@ -35,7 +35,7 @@ object DedupQueries2 {
     */
   private val Tau = 0.25
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dedup_semantic" -> { (s, dir) =>
       import s.implicits._
       val emb = Tables.load(s, dir, "embeddings")
@@ -140,7 +140,7 @@ object DedupQueries2 {
     s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
   }
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "dedup_semantic" ->
       s"""WITH c AS (
          |  SELECT CAST(label AS BIGINT) AS cid, embedding AS cv FROM (

@@ -42,7 +42,7 @@ import graft.operators.Dedup
   * stratum keeps a stable ~2000-doc pair population (26 true pairs at
   * sf0.1 m=3) at O(1) cost.
   */
-object DedupQueries3 {
+object DedupQueries3 extends graft.QueryModule {
 
   /** The banding-ladder flag: some band's r-value signature slice
     * agrees. Identical membership to the VALUE-banded join key
@@ -119,7 +119,7 @@ object DedupQueries3 {
     s.read.parquet(s"$path/pairs")
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dedup_eval" -> { (s, dir) =>
       import s.implicits._
       // one aggregate over the shared eval-pair evidence artifact —
@@ -209,7 +209,7 @@ object DedupQueries3 {
       |       + (1013904223 * (gj + 7)) % 1000000007) % 1000000007)),
       |    1000000007))""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "dedup_eval" ->
       s"""WITH s AS (SELECT doc_id, $shingles3 AS sh FROM documents
          |  WHERE doc_id % (SELECT CAST(ceil(count(*) / 2000.0) AS BIGINT)

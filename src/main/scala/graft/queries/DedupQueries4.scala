@@ -21,9 +21,9 @@ import graft.operators.Dedup
   * all (this is the dedup query whose SQL a reviewer can read as the
   * definition of correctness).
   */
-object DedupQueries4 {
+object DedupQueries4 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // `dedup_containment` — ASYMMETRIC overlap detection (round 8):
     // containment C(A→B) = |A∩B| / |A| over distinct word-8-shingles,
     // flagged at C >= 4/5 by integer cross-multiply (5·I >= 4·|A|).
@@ -96,7 +96,7 @@ object DedupQueries4 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "dedup_containment" ->
       """WITH st AS (SELECT (count(*) + 1999) // 2000 AS stride
         |  FROM documents),

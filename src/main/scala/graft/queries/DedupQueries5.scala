@@ -20,9 +20,9 @@ import graft.operators.Dedup
   * then a |distinct sizes|-row histogram). Oracle replays the full
   * chain through the shared recursive-CTE closure.
   */
-object DedupQueries5 {
+object DedupQueries5 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dedup_cluster_stats" -> { (s, dir) =>
       // shared pinned component labeling (round 20 batch 3) — the CC
       // loop this rollup sat behind now runs once per session
@@ -35,7 +35,7 @@ object DedupQueries5 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "dedup_cluster_stats" ->
       s"""${DedupQueries.clustersCtePrefix},
          |comp AS (SELECT u AS doc_id, min(lbl) AS component

@@ -40,14 +40,14 @@ import graft.functions.GraftFunctions._
   * / docs as ONE double division per source row. Oracle = the shared
   * recursive-closure machinery + a source rollup.
   */
-object DedupQueries6 {
+object DedupQueries6 extends graft.QueryModule {
 
   /** The probed rows-per-band ladder (mirrors
     * Transforms.recallBandRows' codomain).
     */
   private val RValues = Seq(8, 4, 2, 1)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dedup_banding_curve" -> { (s, dir) =>
       import s.implicits._
       // ONE aggregate over the shared eval-pair evidence artifact
@@ -131,7 +131,7 @@ object DedupQueries6 {
       |   string_split(text, ' ')[CAST(gi + 2 AS INT)] || ' ' ||
       |   string_split(text, ' ')[CAST(gi + 3 AS INT)]))""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     // the dedup_eval oracle's sig/pair matrix, with the four per-r
     // curve rows read from ONE f CTE (slice equality == value-key join)
     "dedup_banding_curve" ->

@@ -31,9 +31,9 @@ import graft.functions.GraftFunctions.cdc_chunks
   * IEEE division; chunk_bytes ≥ 1 because empty texts are filtered
   * on both engines (a zero-length doc has no chunks by definition).
   */
-object DedupQueries7 {
+object DedupQueries7 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dedup_cdc" -> { (s, dir) =>
       import s.implicits._
       val docs = graft.operators.Parallelism.ensure(
@@ -56,7 +56,7 @@ object DedupQueries7 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     // boundary + chunk hashes replayed with the text_fingerprint
     // nested-list_reduce idiom: the fresh per-position window hash
     // equals the engine's rolled hash by modular identity, and the

@@ -45,9 +45,9 @@ import graft.operators.Dedup
   * the estimate margin makes the two candidate sets decision-
   * equivalent, the dedup_minhash capture-probability argument.
   */
-object DedupQueries8 {
+object DedupQueries8 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dedup_incremental" -> { (s, dir) =>
       import s.implicits._
       val docs = Tables.load(s, dir, "documents").select($"doc_id", $"text")
@@ -128,7 +128,7 @@ object DedupQueries8 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     // the fold's decision rule over ALL smaller ids (history ∪
     // earlier-in-batch — split-invariant by construction, which is
     // exactly why the oracle needs no snapshot boundary beyond the

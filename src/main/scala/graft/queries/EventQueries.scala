@@ -14,9 +14,9 @@ import graft.operators.{AsOfJoin, RangeJoin}
   * same way — so oracle parity is exact. Raw timestamps are never emitted
   * (us-vs-ns output precision would differ).
   */
-object EventQueries {
+object EventQueries extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q15_asof_join" -> { (s, dir) =>
       import s.implicits._
       val ev = Tables.events(s, dir)
@@ -111,7 +111,7 @@ object EventQueries {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q15_asof_join" ->
       """SELECT p.event_id AS purchase_id, p.user_id,
         |  CAST(epoch_us(p.ts) AS BIGINT) AS purchase_us,

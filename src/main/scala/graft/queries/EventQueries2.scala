@@ -27,11 +27,11 @@ import graft.Tables
   * rollup — the conditional recent-count lives in the same pass, no
   * second scan. All integer micros.
   */
-object EventQueries2 {
+object EventQueries2 extends graft.QueryModule {
 
   private val Week: Long = 7L * 24 * 3600 * 1000000L
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q103_paths" -> { (s, dir) =>
       import s.implicits._
       val ev = Tables.events(s, dir)
@@ -169,7 +169,7 @@ object EventQueries2 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q103_paths" ->
       """WITH e AS (SELECT user_id, event_type,
         |    CAST(epoch_us(ts) AS BIGINT) AS us, event_id FROM events),

@@ -22,9 +22,9 @@ import graft.Tables
   * single-group rank ladder with the real group-count cap — no global
   * window sort.
   */
-object EventQueries3 {
+object EventQueries3 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q115_time_to_convert" -> { (s, dir) =>
       import s.implicits._
       import graft.operators.RankSelect
@@ -79,7 +79,7 @@ object EventQueries3 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q115_time_to_convert" ->
       """WITH e AS (SELECT user_id, event_type,
         |    CAST(epoch_us(ts) AS BIGINT) AS us FROM events),

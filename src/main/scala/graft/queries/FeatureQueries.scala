@@ -23,9 +23,9 @@ import graft.Tables
   * ~9e16 at sf1 is the first scale where a two-pass centered moment
   * would be needed instead.
   */
-object FeatureQueries {
+object FeatureQueries extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // z-score standardization of l_quantity within each returnflag
     // group: mean and variance from exact integer sums (n*s2 - s1^2
     // stays a bit-exact BIGINT), one conversion to double at the end
@@ -78,7 +78,7 @@ object FeatureQueries {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "feat_zscore" ->
       """WITH li AS (
         |  SELECT l_orderkey, l_linenumber, l_returnflag,

@@ -10,9 +10,9 @@ import graft.functions.GraftFunctions.poly_hash
   * float discipline as [[FeatureQueries]]: exact integer/decimal
   * statistics, identical double expression trees on both sides.
   */
-object FeatureQueries2 {
+object FeatureQueries2 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // robust scaling: (x - median) / IQR — outlier-insensitive
     // standardization. The three discrete quantiles come from ONE
     // RankSelect range-shuffle pass (exact ceil(qn) rule == DuckDB
@@ -79,7 +79,7 @@ object FeatureQueries2 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "feat_robust_scale" ->
       """WITH o AS (
         |  SELECT o_orderkey, CAST(o_totalprice AS DECIMAL(15,2)) AS p

@@ -27,14 +27,14 @@ import graft.Tables
   * whole-stage codegen'd built-in higher-order functions, output
   * 4× smaller than the input it replaces.
   */
-object FeatureQueries3 {
+object FeatureQueries3 extends graft.QueryModule {
 
   private val P = 1073741789L
   private val As = Seq(1000003L, 1000033L, 1000037L, 1000039L,
     1000081L, 1000099L, 1000117L, 1000121L)
   private def bOf(j: Int): Long = 31L * j + 7L
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "feat_random_proj" -> { (s, dir) =>
       import s.implicits._
       val signed = (0 until 8).foldLeft(
@@ -54,7 +54,7 @@ object FeatureQueries3 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "feat_random_proj" -> {
       val cols = (0 until 8).map { j =>
         s"""  list_reduce(list_transform(range(1, len(embedding) + 1), gi ->

@@ -29,9 +29,9 @@ import graft.Tables
   * revenue join shuffles once on the customer key; bucket assignment
   * is a broadcast of 9 cut values.
   */
-object FeatureQueries4 {
+object FeatureQueries4 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "feat_target_encode_cv" -> { (s, dir) =>
       import s.implicits._
       val o = Tables.load(s, dir, "orders")
@@ -126,7 +126,7 @@ object FeatureQueries4 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "feat_target_encode_cv" ->
       """WITH o AS (SELECT o_orderpriority AS category,
         |    o_orderkey % 5 AS fold,

@@ -10,13 +10,14 @@ import graft.Tables
   * query; the graphs themselves are scale-invariant (replication
   * shifts order ids only — SURVEY §5), so at 10×/100× the edge-build
   * SCAN is the entire growth term, paid up to 5× over. Both scans now
-  * land in the session artifact store (GraftSession.pinnedArtifact —
-  * durable + params-pinned when an index root is configured, session
-  * temp otherwise): built once per (dir) per session, every consumer
-  * re-reads the parquet and applies its own partitioning/weighting.
+  * land in the artifact store (GraftSession.pinnedArtifact — params-
+  * pinned under the configured index root, or the session temp root
+  * when none is set): built once per source fingerprint, every
+  * consumer re-reads the parquet and applies its own
+  * partitioning/weighting.
   *
   * Determinism: both artifacts are exact-integer (BIGINT keys and
-  * counts) pure functions of their fact tables — the cachedArtifact
+  * counts) pure functions of their fact tables — the pinnedArtifact
   * purity contract. Consumers' downstream plans are UNCHANGED (same
   * relations, same repartition/persist disciplines); only the
   * scan-side derivation is shared, so oracle parity is unaffected.

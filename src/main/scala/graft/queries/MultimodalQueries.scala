@@ -8,9 +8,9 @@ import graft.multimodal.Multimodal
   * table -> partition-wise feature extraction (stub decoder). The oracle
   * replays the byte histogram in SQL (ASCII corpus: byte == codepoint).
   */
-object MultimodalQueries {
+object MultimodalQueries extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "mm_extract" -> { (s, dir) =>
       val media = Multimodal.fromDocuments(Tables.load(s, dir, "documents"))
       Multimodal.extractFeatures(media).toDF()
@@ -89,7 +89,7 @@ object MultimodalQueries {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "mm_extract" ->
       """WITH h AS (SELECT doc_id,
         |  CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'

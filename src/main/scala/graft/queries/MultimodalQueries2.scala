@@ -28,7 +28,7 @@ import graft.multimodal.Multimodal
   * otherwise run it twice), bucket join on (band, value), verify only
   * survivors.
   */
-object MultimodalQueries2 {
+object MultimodalQueries2 extends graft.QueryModule {
 
   private val HD = "0123456789abcdef"
 
@@ -89,7 +89,7 @@ object MultimodalQueries2 {
       .select($"id_a", $"id_b", $"hamming")
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "mm_dedup" -> { (s, dir) =>
       // one row per image — persist so the band self-join reuses the
       // kernel output instead of running the hash twice. The hex→int
@@ -170,7 +170,7 @@ object MultimodalQueries2 {
       |      '') AS phash
       |  FROM sums)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "mm_dedup" -> (phashCte +
       s""",
          |hw AS (SELECT media_id,

@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * the oracle replays the full chain with a distinct² pair matrix
   * (fine at oracle scale; the engine-side join is the banded one).
   */
-object MultimodalQueries3 {
+object MultimodalQueries3 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "mm_hamming_curve" -> { (s, dir) =>
       import s.implicits._
       val hx = MultimodalQueries2.phashBandFrame(s, dir)
@@ -51,7 +51,7 @@ object MultimodalQueries3 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "mm_hamming_curve" -> (MultimodalQueries2.phashCte +
       s""",
          |hw AS (SELECT media_id,

@@ -8,14 +8,14 @@ import graft.pipeline.{PipelineRunner, PipelineSpec, SourceSpec, SinkSpec, Trans
   * same code path a YAML-configured job takes (reference pipelines:
   * csv-to-parquet's filter, text-to-text's map, columnMapping).
   */
-object PipelineQueries {
+object PipelineQueries extends graft.QueryModule {
 
   private val noSink = SinkSpec("file", Map("path" -> "/tmp/graft-unused"))
 
   private def run(s: SparkSession, spec: PipelineSpec): DataFrame =
     PipelineRunner.buildBatch(s, spec)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // reference csv-to-parquet: filter records whose `status`-like column
     // contains a value (PipelineBuilder.SerializableFilter semantics)
     "pipe_filter" -> { (s, dir) =>
@@ -76,7 +76,7 @@ object PipelineQueries {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "pipe_filter" ->
       """SELECT p_partkey, p_type, p_brand, p_retailprice
         |FROM part WHERE position('PROMO' IN p_type) > 0""".stripMargin,

@@ -14,7 +14,7 @@ import graft.Tables
   * Spark and DuckDB. Counts and sums of integral-valued doubles are
   * already exact.
   */
-object RelationalQueries {
+object RelationalQueries extends graft.QueryModule {
 
   /** Exact 2-dec money: double -> decimal(15,2) (values are 2-dec by construction). */
   private def money(c: Column): Column = c.cast(DecimalType(15, 2))
@@ -22,7 +22,7 @@ object RelationalQueries {
   private def rate(c: Column): Column = c.cast(DecimalType(8, 4))
   private def msum(c: Column): Column = sum(money(c)).cast("double")
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q1_agg" -> { (s, dir) =>
       import s.implicits._
       Tables.load(s, dir, "lineitem")
@@ -179,7 +179,7 @@ object RelationalQueries {
   private val rev =
     "CAST(l_extendedprice AS DECIMAL(15,2)) * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))"
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q1_agg" ->
       s"""SELECT l_returnflag, l_linestatus,
          |  sum(l_quantity) AS sum_qty,

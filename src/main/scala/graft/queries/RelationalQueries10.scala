@@ -7,9 +7,9 @@ import graft.Tables
 /** Tenth relational wave (SURVEY.md §2.2, round 4): event-sequence
   * transition analysis and the modern conditional-aggregate family.
   */
-object RelationalQueries10 {
+object RelationalQueries10 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // Markov transition matrix over user event sequences: P(next event
     // type | current) from lead() over each user's time-ordered stream.
     // The window partitions by the HIGH-cardinality user key; counts
@@ -248,7 +248,7 @@ object RelationalQueries10 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q79_transition_matrix" ->
       """WITH seq AS (
         |  SELECT user_id, event_type,

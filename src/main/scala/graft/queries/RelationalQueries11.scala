@@ -33,7 +33,7 @@ import graft.Tables
   * No driver-side graph, no windows. 3 iterations is the fixed-depth
   * contract (the latency knob on cyclic plans — see q70's scaladoc).
   */
-object RelationalQueries11 {
+object RelationalQueries11 extends graft.QueryModule {
 
   /** One k-core peel round: recompute degrees, keep nodes with deg >= k,
     * semi-join the edge list down to surviving endpoints.
@@ -85,7 +85,7 @@ object RelationalQueries11 {
           expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("rank"))
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q90_pagerank" -> { (s, dir) =>
       import s.implicits._
       // node ids: customers on even, suppliers on odd — one BIGINT
@@ -226,7 +226,7 @@ object RelationalQueries11 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q90_pagerank" -> {
       def iter(prev: String, cur: String) =
         s"""c$cur AS (

@@ -32,7 +32,7 @@ import graft.Tables
   * integer epoch-micros on both engines (never raw timestamps — the
   * round-1 precision rule).
   */
-object RelationalQueries12 {
+object RelationalQueries12 extends graft.QueryModule {
 
   private val Rounds = 3
 
@@ -58,7 +58,7 @@ object RelationalQueries12 {
       .select($"dst".as("node"), (-$"m.nl").as("lbl"))
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q93_label_prop" -> { (s, dir) =>
       import s.implicits._
       // q92's edge build via the shared co-order scan artifact (round
@@ -287,7 +287,7 @@ object RelationalQueries12 {
        |  QUALIFY row_number() OVER (PARTITION BY dst
        |    ORDER BY cnt DESC, lbl ASC) = 1)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q99_seasonal" ->
       """WITH sparse AS (
         |  SELECT epoch_us(ts) // 3600000000 AS hr,

@@ -42,7 +42,7 @@ import graft.operators.{Quality, RangeJoin}
   * FK check a 100 TB ingest gate runs, joined with the single-pass
   * rule audit corpus_audit already exercises.
   */
-object RelationalQueries13 {
+object RelationalQueries13 extends graft.QueryModule {
 
   /** Morton interleave of two `bits`-bit columns: bit i of `a` lands at
     * 2i, bit i of `b` at 2i+1. Built-in shifts only — codegen'd.
@@ -53,7 +53,7 @@ object RelationalQueries13 {
         .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i + 1))
     }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q100_attribution" -> { (s, dir) =>
       import s.implicits._
       val ev = Tables.events(s, dir)
@@ -212,7 +212,7 @@ object RelationalQueries13 {
       s"((($a >> $i) & 1) << ${2 * i})",
       s"((($b >> $i) & 1) << ${2 * i + 1})")).mkString(" | ")
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q100_attribution" ->
       """WITH j AS (
         |  SELECT p.event_id AS purchase_id, p.user_id,

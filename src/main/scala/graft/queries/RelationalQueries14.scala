@@ -43,9 +43,9 @@ import graft.Tables
   * of exact integer products (supp·N < 2^63 — the asserted-invariant
   * bound); ranking and ties are integer-first (supp desc, item ids).
   */
-object RelationalQueries14 {
+object RelationalQueries14 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q101_cusum" -> { (s, dir) =>
       import s.implicits._
       val daily = Tables.load(s, dir, "orders")
@@ -149,7 +149,7 @@ object RelationalQueries14 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q101_cusum" ->
       """WITH daily AS (
         |  SELECT CAST(o_orderdate AS DATE) AS day,

@@ -31,9 +31,9 @@ import graft.Tables
   * grid). Tie on the argmax resolves to the smallest value via
   * lexicographic struct max with negated value.
   */
-object RelationalQueries15 {
+object RelationalQueries15 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // `dq_benford` — Benford first-digit audit (round 8, the classic
     // fabricated-numbers screen): first significant digit of
     // o_totalprice vs Benford's log10(1+1/d) law. The law needs log —
@@ -360,7 +360,7 @@ object RelationalQueries15 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "dq_benford" ->
       """WITH f AS (SELECT CAST(nullif(regexp_extract(
         |    CAST(o_totalprice AS VARCHAR), '([1-9])', 1), '') AS BIGINT)

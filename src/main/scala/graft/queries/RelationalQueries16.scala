@@ -30,9 +30,9 @@ import graft.Tables
   * the ladder fallback instead of silently serializing a fact-sized
   * sort onto one core.
   */
-object RelationalQueries16 {
+object RelationalQueries16 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q116_rfm" -> { (s, dir) =>
       import s.implicits._
       val nCust = Tables.rowCount(s, dir, "customer")
@@ -65,7 +65,7 @@ object RelationalQueries16 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q116_rfm" ->
       """WITH o AS (SELECT o_custkey, CAST(o_orderdate AS DATE) AS d,
         |    CAST(o_totalprice AS DECIMAL(15,2)) AS p FROM orders),

@@ -59,12 +59,12 @@ import graft.Tables
   * text_zipf_audit discipline). Tie-break (support desc, e1, e2, e3)
   * makes the limit a total order, so the top-20 set is deterministic.
   */
-object RelationalQueries17 {
+object RelationalQueries17 extends graft.QueryModule {
 
   /** Power-iteration depth (fixed-depth contract, the q90/q70 knob). */
   private val StatRounds = 8
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q118_survival" -> { (s, dir) =>
       import s.implicits._
       val ev = Tables.events(s, dir)
@@ -286,7 +286,7 @@ object RelationalQueries17 {
       |st AS (SELECT DISTINCT src AS state FROM p
       |  UNION SELECT DISTINCT dst FROM p)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q118_survival" ->
       """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
         |life AS (SELECT user_id, min(day) AS f, max(day) AS l

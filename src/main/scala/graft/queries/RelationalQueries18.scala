@@ -34,7 +34,7 @@ import graft.Tables
   * Scale: one groupBy to days, one tiny-frame aggregate — nothing
   * else touches the fact table.
   */
-object RelationalQueries18 {
+object RelationalQueries18 extends graft.QueryModule {
 
   /** Per-row exact cents from the double price column (the money
     * discipline: decimal cast BEFORE any arithmetic, cents as long).
@@ -45,7 +45,7 @@ object RelationalQueries18 {
   private val centsSql =
     "CAST(CAST(o_totalprice AS DECIMAL(15,2)) * 100 AS BIGINT)"
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q124_changepoint" -> { (s, dir) =>
       import s.implicits._
       val daily = Tables.load(s, dir, "orders")
@@ -67,7 +67,7 @@ object RelationalQueries18 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q124_changepoint" ->
       s"""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
          |    CAST(sum($centsSql) AS BIGINT) AS y

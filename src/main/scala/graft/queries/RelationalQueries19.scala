@@ -38,7 +38,7 @@ import graft.Tables
   * ~64·#days rows at ANY corpus size — the fact table is touched
   * once, by q125's daily rollup.
   */
-object RelationalQueries19 {
+object RelationalQueries19 extends graft.QueryModule {
 
   private def centsCol = (col("o_totalprice").cast("decimal(15,2)") * 100)
     .cast("long")
@@ -47,7 +47,7 @@ object RelationalQueries19 {
 
   private val B = 64 // bootstrap resamples (committed constant)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q126_harmonic" -> { (s, dir) =>
       import s.implicits._
       // the min-dist table from the fixed seed set is the shared
@@ -89,7 +89,7 @@ object RelationalQueries19 {
        |    FROM $prev d JOIN e ON e.src = d.node)
        |  GROUP BY seed, node)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q126_harmonic" -> {
       val rounds = (1 to 4)
         .map(i => bfsRoundSql(if (i == 1) "d0" else s"d${i - 1}", s"d$i"))

@@ -11,9 +11,9 @@ import graft.operators.Skew
   * aggregation, scalar subquery. Same parity discipline as
   * RelationalQueries.
   */
-object RelationalQueries2 {
+object RelationalQueries2 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // salted join must be row-identical to the plain join (the oracle)
     "q21_skew_join" -> { (s, dir) =>
       import s.implicits._
@@ -91,7 +91,7 @@ object RelationalQueries2 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q21_skew_join" ->
       """SELECT o_custkey, sum(l_quantity) AS sum_qty, count(*) AS n
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey

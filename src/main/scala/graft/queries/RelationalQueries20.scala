@@ -36,7 +36,7 @@ import graft.Tables
   * Scale: one fact-table rollup to days; the 8 folds run on the
   * collected ≤days array (the q122 shape).
   */
-object RelationalQueries20 {
+object RelationalQueries20 extends graft.QueryModule {
 
   private def centsCol = (col("o_totalprice").cast("decimal(15,2)") * 100)
     .cast("long")
@@ -51,7 +51,7 @@ object RelationalQueries20 {
 
   private val Cutoffs = 8 // backtest horizon: the last 8 days
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dq_profile" -> { (s, dir) =>
       import s.implicits._
       val t = Tables.load(s, dir, "orders")
@@ -146,7 +146,7 @@ object RelationalQueries20 {
        |FROM orders""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "dq_profile" -> ProfileCols
       .map { case (c, k) => profileRowSql(c, k) }
       .mkString("", "\nUNION ALL\n", ""),

@@ -39,14 +39,14 @@ import graft.Tables
   * groupBy at all: the single-row aggregate partial-combines
   * map-side and the plan never shuffles more than 8 numbers.
   */
-object RelationalQueries21 {
+object RelationalQueries21 extends graft.QueryModule {
 
   private def centsCol = (col("o_totalprice").cast("decimal(15,2)") * 100)
     .cast("long")
   private val centsSql =
     "CAST(CAST(o_totalprice AS DECIMAL(15,2)) * 100 AS BIGINT)"
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q129_winters" -> { (s, dir) =>
       import s.implicits._
       // the SHARED operators.Trend Winters kernel (one definition
@@ -304,7 +304,7 @@ object RelationalQueries21 {
   private def mean(sc: String, nc: String) =
     when(col(nc) > 0L, col(sc).cast("double") / col(nc).cast("double"))
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q129_winters" -> {
       val zeros = Seq.fill(8)("CAST(0.0 AS DOUBLE)").mkString(", ")
       s"""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,

@@ -70,7 +70,7 @@ import graft.Tables
   * (replication shifts order keys only), so scale probes measure
   * the edge-build scan, as for q126.
   */
-object RelationalQueries22 {
+object RelationalQueries22 extends graft.QueryModule {
 
   /** The walk depth AND the pair-distance horizon — one constant, so
     * raising the depth widens the horizon consistently (the contract
@@ -79,7 +79,7 @@ object RelationalQueries22 {
     */
   private val Horizon = 4
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q135_betweenness" -> { (s, dir) =>
       import s.implicits._
       // the min-dist walk-count table (seed, node, dist, sigma) is the
@@ -141,7 +141,7 @@ object RelationalQueries22 {
        |  FROM r${k - 1} d JOIN e ON e.src = d.node
        |  GROUP BY d.seed, e.dst)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q135_betweenness" -> {
       val rounds = (1 to Horizon).map(roundSql).mkString(",\n")
       s"""WITH cs AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,

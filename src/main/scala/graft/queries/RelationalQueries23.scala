@@ -31,9 +31,9 @@ import org.apache.spark.sql.functions._
   * replication (the graph-family fact), so this rides the artifact
   * for free.
   */
-object RelationalQueries23 {
+object RelationalQueries23 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q136_assortativity" -> { (s, dir) =>
       import s.implicits._
       val cs = GraphEdges.cotradePairs(s, dir).select($"src", $"dst")
@@ -68,7 +68,7 @@ object RelationalQueries23 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     // the same exact-integer moment sums over the same directed edge
     // list; r's double tree is textually identical (sqrt is
     // correctly-rounded IEEE on both engines)

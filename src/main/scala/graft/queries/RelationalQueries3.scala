@@ -8,9 +8,9 @@ import graft.Tables
 /** Third relational wave (SURVEY.md §2.2): RANGE window frames,
   * GROUPING SETS, ordered array aggregation, JSON extraction.
   */
-object RelationalQueries3 {
+object RelationalQueries3 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // value-range window frame: orders within a 10k price band below
     // each order, per customer (peers included -> tie-order independent)
     "q27_range_frame" -> { (s, dir) =>
@@ -115,7 +115,7 @@ object RelationalQueries3 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q27_range_frame" ->
       """SELECT o_custkey, o_orderkey, o_totalprice,
         |  count(*) OVER (PARTITION BY o_custkey ORDER BY o_totalprice

@@ -9,9 +9,9 @@ import graft.Tables
   * rank-family window functions. Total orderings everywhere so results
   * are deterministic.
   */
-object RelationalQueries4 {
+object RelationalQueries4 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q35_pagination" -> { (s, dir) =>
       import s.implicits._
       Tables.load(s, dir, "customer")
@@ -46,7 +46,7 @@ object RelationalQueries4 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q35_pagination" ->
       """SELECT c_custkey, c_name, c_acctbal FROM customer
         |ORDER BY c_acctbal DESC, c_custkey ASC

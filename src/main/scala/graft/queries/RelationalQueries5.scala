@@ -11,9 +11,9 @@ import graft.functions.GraftFunctions._
   * extraction, multi-distinct aggregation. Total orderings / integer
   * arithmetic throughout so results hash-match the DuckDB oracle.
   */
-object RelationalQueries5 {
+object RelationalQueries5 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q38_intersect" -> { (s, dir) =>
       import s.implicits._
       Tables.load(s, dir, "customer").select($"c_nationkey".as("nationkey"))
@@ -103,7 +103,7 @@ object RelationalQueries5 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q38_intersect" ->
       """SELECT c_nationkey AS nationkey FROM customer
         |INTERSECT

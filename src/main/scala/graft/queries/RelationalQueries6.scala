@@ -9,9 +9,9 @@ import graft.Tables
   * UNPIVOT, null-handling surface, LATERAL subqueries. Exact decimal
   * arithmetic wherever money is averaged so parity is bit-exact.
   */
-object RelationalQueries6 {
+object RelationalQueries6 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // sliding window: 4-row trailing sum per customer (exact decimal,
     // cast to double at the end) + row count actually in the frame
     "q48_moving_avg" -> { (s, dir) =>
@@ -137,7 +137,7 @@ object RelationalQueries6 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q48_moving_avg" ->
       """SELECT o_custkey, o_orderkey,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(15,2))) OVER w AS DOUBLE)

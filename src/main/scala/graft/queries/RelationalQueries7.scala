@@ -13,11 +13,11 @@ import graft.Tables
   * DATE/`unix_micros` (never raw timestamps), explicit tie-breaks in
   * every window order.
   */
-object RelationalQueries7 {
+object RelationalQueries7 extends graft.QueryModule {
 
   private val epoch = to_date(lit("1970-01-01"))
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // gaps and islands: runs of consecutive active DAYS per user.
     // dayno - row_number() is constant within a run — the classic
     // O(1)-window island key; per-user island stats are exact ints.
@@ -180,7 +180,7 @@ object RelationalQueries7 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q56_gaps_islands" ->
       """WITH days AS (
         |  SELECT DISTINCT user_id,

@@ -8,7 +8,7 @@ import graft.Tables
   * ingestion path, blocking-based entity resolution, incremental
   * aggregation maintenance, and the portable-SQL entry point.
   */
-object RelationalQueries8 {
+object RelationalQueries8 extends graft.QueryModule {
 
   /** ONE ANSI-portable SQL string that is simultaneously the Spark
     * query (via spark.sql over registered views) and the DuckDB oracle
@@ -31,7 +31,7 @@ object RelationalQueries8 {
       |SELECT c_nationkey, c_custkey, n_orders, max_price, rk
       |FROM r WHERE rk <= 3""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // semi-structured ingestion via Spark 4's VARIANT type: parse the
     // JSON props column ONCE into the binary variant encoding, then do
     // typed path extraction on the variant — at 100 TB this is the
@@ -188,7 +188,7 @@ object RelationalQueries8 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q64_variant" ->
       """SELECT event_type,
         |  CAST(CAST(json_extract_string(props, '$.k') AS BIGINT) // 10

@@ -10,7 +10,7 @@ import graft.Tables
   * EWMA folds, interval-overlap arithmetic, array set operations, and
   * the 2-D Pareto frontier ([[graft.operators.Skyline]]).
   */
-object RelationalQueries9 {
+object RelationalQueries9 extends graft.QueryModule {
 
   /** Recursive traversal over a functional edge set derived from
     * nation; Spark 4.1 plans WITH RECURSIVE natively (UnionLoopExec) —
@@ -48,7 +48,7 @@ object RelationalQueries9 {
       |  CAST(count(*) AS BIGINT) AS n_visits
       |FROM r GROUP BY node""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // recursive CTE: multi-source reachability with depth over a
     // derived edge set; the oracle runs the same recursion with the
     // edge SQL inlined as a CTE
@@ -209,7 +209,7 @@ object RelationalQueries9 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "q70_recursive_cte" ->
       (s"WITH RECURSIVE e AS (\n$edgeSql),\n" +
         recursiveSql("e").stripPrefix("WITH RECURSIVE ")),

@@ -11,13 +11,13 @@ import graft.operators.Similarity
   * exactly). Cosines are bit-identical between engines (strict left
   * folds over identical doubles), so top-k ordering matches exactly.
   */
-object SimilarityQueries {
+object SimilarityQueries extends graft.QueryModule {
 
   private def queryDf(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings").filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ann_bruteforce" -> { (s, dir) =>
       Similarity.bruteForceTopK(
         Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
@@ -91,7 +91,7 @@ object SimilarityQueries {
        | + ${bit("3 * gb + 2")})""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "ann_bruteforce" ->
       s"""SELECT e.vec_id, e.label, ${cos("e.embedding", "q.qv")} AS cos
          |FROM embeddings e,

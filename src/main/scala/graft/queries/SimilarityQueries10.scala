@@ -52,7 +52,7 @@ import graft.operators.Clustering
   * beam loop (variant-keyed edges — the r13 tagged-loop discipline),
   * so the iterative rounds' scheduling latency is paid once.
   */
-object SimilarityQueries10 {
+object SimilarityQueries10 extends graft.QueryModule {
 
   import SimilarityQueries6.{NAnchors, Beam, Steps, Degree}
 
@@ -116,7 +116,7 @@ object SimilarityQueries10 {
        |    JOIN a aa ON aa.q_id = ce.q_id))""".stripMargin
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ann_graph_trained" -> { (s, dir) =>
       import s.implicits._
       val kc = math.ceil(math.sqrt(
@@ -277,7 +277,7 @@ object SimilarityQueries10 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     // the full chain replayed: quantize → 2 CTE-unrolled Lloyd rounds
     // (k = ⌈√n⌉ scalar-subquery-derived) → per-variant graph + entry →
     // two walk chains (shared walkCtes, equal width) → recall@1

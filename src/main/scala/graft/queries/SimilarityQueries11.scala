@@ -58,11 +58,11 @@ import org.apache.spark.sql.functions._
   * reciprocity is a self-join on the degree-bounded edge frame keyed
   * (dst, src). Nothing here scales past O(|edges|).
   */
-object SimilarityQueries11 {
+object SimilarityQueries11 extends graft.QueryModule {
 
   import SimilarityQueries6.{NAnchors, buildGraph}
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ann_index_stats" -> { (s, dir) =>
       import s.implicits._
       val g = buildGraph(s, dir)
@@ -147,7 +147,7 @@ object SimilarityQueries11 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "ann_index_stats" ->
       s"""WITH ${SimilarityQueries6.graphCtes(materialized = true)},
          |ind AS (SELECT n.vec_id,

@@ -12,9 +12,9 @@ import graft.operators.Similarity
   * bit-identical across engines, so thresholds and vote rankings are
   * exact.
   */
-object SimilarityQueries2 {
+object SimilarityQueries2 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // radius query: everything within cosine >= 0.2 of vector 0 — a
     // shuffle-free scan+filter (the dedup/near-match primitive when the
     // neighbor count, not k, is the unknown)
@@ -128,7 +128,7 @@ object SimilarityQueries2 {
     s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
   }
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "ann_range" ->
       s"""SELECT e.vec_id, e.label, ${cos("e.embedding", "q.qv")} AS cos
          |FROM embeddings e,

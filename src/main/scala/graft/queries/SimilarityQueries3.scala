@@ -25,14 +25,14 @@ import graft.functions.GraftFunctions.cosine_sim
   * shape — `coalesce(1.0/(60+rv), 0.0) + coalesce(1.0/(60+rl), 0.0)`
   * — so DuckDB reproduces every double bit-for-bit.
   */
-object SimilarityQueries3 {
+object SimilarityQueries3 extends graft.QueryModule {
 
   private val Depth = 100 // per-retriever shortlist depth
   private val K0 = 60     // standard RRF dampening constant
   private val TopK = 20
   private val terms = Seq("query", "join", "data")
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ann_rrf" -> { (s, dir) =>
       import s.implicits._
       val docs = Tables.load(s, dir, "documents")
@@ -129,7 +129,7 @@ object SimilarityQueries3 {
   private def cos(a: String, b: String): String =
     s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "ann_rrf" ->
       s"""WITH vt AS (
          |  SELECT e.vec_id AS id, ${cos("e.embedding", "q.qv")} AS cos

@@ -23,13 +23,13 @@ import graft.functions.GraftFunctions.cosine_sim
   * WindowGroupLimit prunes each to k·partitions rows pre-shuffle),
   * and the hit join runs on ≤ anchors·40 rows.
   */
-object SimilarityQueries4 {
+object SimilarityQueries4 extends graft.QueryModule {
 
   private val NAnchors = 5
   private val ShortlistK = 40
   private val TopK = 10
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // IVFPQ — the canonical billion-vector index shape (FAISS
     // IndexIVFPQ): the IVF coarse quantizer prunes the corpus to
     // nprobe cells, then PQ ADC scores ONLY the survivors from
@@ -190,7 +190,7 @@ object SimilarityQueries4 {
   private def cos(a: String, b: String): String =
     s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     // pairwise candidate cosines precomputed in a flat CTE (20x20
     // rows) so the recursive greedy needs no lambdas — DuckDB's binder
     // rejects outer-lambda captures inside LATERAL within a recursive

@@ -29,13 +29,13 @@ import graft.functions.GraftFunctions.cosine_sim
   * construction. The production search path this curve tunes is
   * ann_ivf/ann_ivfpq, which never brute-forces.
   */
-object SimilarityQueries5 {
+object SimilarityQueries5 extends graft.QueryModule {
 
   private val NAnchors = 5
   private val TopK = 10
   private val Probes = Seq(1, 2, 3, 4)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // `ann_centroid_balance` (round 18) — IVF CELL-OCCUPANCY audit,
     // the health number every IVF deployment watches: a skewed
     // quantizer makes nprobe recall and latency lopsided (hot cells
@@ -222,7 +222,7 @@ object SimilarityQueries5 {
   private def cos(a: String, b: String): String =
     s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     // the argmax-cell rank window replays assignCells (same total
     // order); quantile_disc == the committed ceil(q·k) 1-based rank
     // rule; imbalance is the identical double tree on both engines

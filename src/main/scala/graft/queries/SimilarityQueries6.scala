@@ -47,7 +47,7 @@ import graft.functions.GraftFunctions.cosine_sim
   * rationals into one IEEE division; degenerate anchors (no positives
   * or no negatives) emit null rather than tripping ANSI division.
   */
-object SimilarityQueries6 {
+object SimilarityQueries6 extends graft.QueryModule {
 
   private[queries] val NAnchors = 5
   // probed at sf0.01: convergence by step 4; 6 keeps margin without
@@ -175,7 +175,7 @@ object SimilarityQueries6 {
       .select($"q_id", $"cid".as("node"), $"ec".as("ncos"))
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ann_graph_search" -> { (s, dir) =>
       import s.implicits._
       val g = buildGraph(s, dir)
@@ -289,7 +289,7 @@ object SimilarityQueries6 {
        |  WHERE rn <= $width)""".stripMargin
   }.mkString(",\n")
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "ann_graph_search" ->
       s"""WITH ${graphCtes(materialized = false)},
          |w0 AS (SELECT q_id, cid AS node, ec AS c

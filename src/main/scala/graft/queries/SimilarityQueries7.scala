@@ -43,7 +43,7 @@ import graft.operators.Clustering
   * WindowGroupLimit), and the exact side is anchors-bounded (5 rows
   * broadcast).
   */
-object SimilarityQueries7 {
+object SimilarityQueries7 extends graft.QueryModule {
 
   private val M = 8 // subspaces
   private val SubDim = 8 // dims per subspace (64 / M)
@@ -57,7 +57,7 @@ object SimilarityQueries7 {
   private def d2c(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.sq_dist(a, b)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ann_ivfpq_trained" -> { (s, dir) =>
       import s.implicits._
       val pts = Tables.load(s, dir, "embeddings")
@@ -187,7 +187,7 @@ object SimilarityQueries7 {
        |    ON t.qid = e.qid AND t.vec_id = e.vec_id
        |  GROUP BY t.qid)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "ann_ivfpq_trained" ->
       s"""WITH pts AS (
          |  SELECT vec_id, list_transform(embedding,

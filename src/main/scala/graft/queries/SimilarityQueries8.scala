@@ -28,13 +28,13 @@ import graft.functions.GraftFunctions.cosine_sim
   * |anchors| ≫ partition-count scales via more anchors, and hits
   * aggregate by left-semi join — no driver loops, no full sorts.
   */
-object SimilarityQueries8 {
+object SimilarityQueries8 extends graft.QueryModule {
 
   private val Dims = Seq(8, 16, 32, 64)
   private val NAnchors = 5
   private val TopK = 10
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ann_matryoshka" -> { (s, dir) =>
       import s.implicits._
       val emb = Tables.load(s, dir, "embeddings")
@@ -92,7 +92,7 @@ object SimilarityQueries8 {
        |FROM truth tt JOIN top_$d pp
        |  ON tt.q_id = pp.q_id AND tt.vec_id = pp.vec_id""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "ann_matryoshka" -> {
       val tops = Dims.map { d =>
         s"""top_$d AS (SELECT q_id, vec_id FROM (

@@ -40,14 +40,14 @@ import graft.functions.GraftFunctions.cosine_sim
   * ann_graph_search loop; localCheckpoint per iterated step (the
   * beam-frontier double-consume discipline).
   */
-object SimilarityQueries9 {
+object SimilarityQueries9 extends graft.QueryModule {
 
   import SimilarityQueries6.{NAnchors, Beam, Degree, cos, walkCtes}
 
   private val UpperDeg = 4
   private val GreedySteps = 4
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ann_hier_search" -> { (s, dir) =>
       import s.implicits._
       val g = SimilarityQueries6.buildGraph(s, dir)
@@ -229,7 +229,7 @@ object SimilarityQueries9 {
        |  WHERE rn = 1)""".stripMargin
   }.mkString(",\n")
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "ann_hier_search" ->
       s"""WITH ${SimilarityQueries6.graphCtes(materialized = true)},
          |upper AS MATERIALIZED (SELECT CAST(vec_id AS BIGINT) AS uid, embedding AS uv

@@ -19,11 +19,11 @@ import graft.functions.GraftFunctions._
   * plans degrade gracefully to the sketches' published error bounds
   * without any change in shape.
   */
-object SketchQueries {
+object SketchQueries extends graft.QueryModule {
 
   private val kllRanks = Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // heavy hitters: per-shard frequent-items sketches of p_brand,
     // unioned globally, top-10 by (est desc, item asc). 25 distinct
     // brands < 0.75·128 keeps the sketch (and every merge) exact.
@@ -80,7 +80,7 @@ object SketchQueries {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "sketch_freq_topk" ->
       """SELECT p_brand AS brand, CAST(count(*) AS BIGINT) AS n_parts
         |FROM part GROUP BY 1

@@ -10,9 +10,9 @@ import graft.functions.GraftFunctions._
   * identical regex classes, integer polynomial hashes) so the DuckDB
   * oracle reproduces results exactly — including the fingerprints.
   */
-object TextQueries {
+object TextQueries extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "text_tokens" -> { (s, dir) =>
       Tables.load(s, dir, "documents").select(
         col("doc_id"),
@@ -59,7 +59,7 @@ object TextQueries {
   private def sqlCount(set: String) =
     s"len(list_filter(string_split(text, ' '), gw -> gw IN ($set)))"
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "text_tokens" ->
       """SELECT doc_id, length(text) AS n_chars_calc,
         |  (length(text) - length(replace(text, ' ', '')) + 1) AS n_tokens,

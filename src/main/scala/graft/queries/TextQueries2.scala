@@ -11,7 +11,7 @@ import graft.functions.GraftFunctions._
   * HOFs, shared regex classes, integer arithmetic, double division as
   * the final step) so the DuckDB oracle reproduces results exactly.
   */
-object TextQueries2 {
+object TextQueries2 extends graft.QueryModule {
 
   /** Regexes shared verbatim with the oracle (lowercase classes only,
     * RE2-safe syntax — identical semantics in Java regex and DuckDB).
@@ -31,7 +31,7 @@ object TextQueries2 {
     (col("c_nationkey") + 100).cast("string"), lit("-555-"),
     lpad(pmod(col("c_custkey"), lit(10000)).cast("string"), 4, "0"))
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // Gopher-style repetition signals: top-word fraction and duplicate
     // word-trigram fraction per document. Whole computation is row-local
     // array HOFs — no shuffle at all; scales linearly with the corpus.
@@ -92,7 +92,7 @@ object TextQueries2 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "text_repetition" ->
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |r AS (SELECT doc_id, len(ws) AS n_words,

@@ -10,9 +10,9 @@ import graft.Tables
   * "does this doc read like the corpus"). All counts stay BIGINT; the
   * single ratio is derived at the end, so parity is exact.
   */
-object TextQueries3 {
+object TextQueries3 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // per-doc bigram familiarity: mean corpus frequency of the doc's
     // bigrams. Docs whose bigrams are globally rare are statistical
     // outliers (boilerplate, garbled text, wrong language). The corpus
@@ -44,7 +44,7 @@ object TextQueries3 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "text_bigram_rarity" ->
       """WITH db AS (
         |  SELECT doc_id, unnest(list_transform(

@@ -23,9 +23,9 @@ import graft.Tables
   * hash shuffle on the high-cardinality key; survivor = min doc_id
   * (the dedup_exact convention).
   */
-object TextQueries4 {
+object TextQueries4 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "text_readability" -> { (s, dir) =>
       import s.implicits._
       Tables.load(s, dir, "documents")
@@ -100,7 +100,7 @@ object TextQueries4 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     // regexp_replace needs the 'g' flag in DuckDB (Spark replaces all
     // occurrences by default)
     "text_readability" ->

@@ -26,7 +26,7 @@ import graft.Tables
   * parallelism — zero shuffles; at 100 TB this is a pure map over
   * the corpus, exactly what a gate pass should be.
   */
-object TextQueries5 {
+object TextQueries5 extends graft.QueryModule {
 
   private val stopList =
     graft.functions.GraftFunctions.stopwords.map(w => s"'$w'").mkString(", ")
@@ -36,7 +36,7 @@ object TextQueries5 {
   private def sqlCount(set: String) =
     s"len(list_filter(string_split(text, ' '), gw -> gw IN ($set)))"
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // `text_langid_eval` — the CONFUSION MATRIX for the langid
     // classifier (round 8): per (true lang, predicted lang) counts
     // plus each true lang's total and the share — the eval artifact a
@@ -87,8 +87,8 @@ object TextQueries5 {
     // persist + df-rollup + semi-join shape is gone: the shared flag
     // comes from ONE count window over the shingle-hash partition —
     // one shuffle of the postings, nothing persisted, nothing consumed
-    // twice. tools/QdProbe alternated the three candidate stage shapes
-    // at 10× under control-stamped rounds (steal waves hit all arms
+    // twice. Alternating the three candidate stage shapes at 10×
+    // under control-stamped rounds (steal waves hit all arms
     // equally): window 5.5/5.0/8.5 s vs hashed-persist-semi
     // 5.9/5.6/12.6 vs recompute-semi 9.0/98/11.4 — the window form is
     // both the min AND the tightest tail (text_bigram_rarity measured
@@ -172,7 +172,7 @@ object TextQueries5 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "dq_quality_dup" ->
       """WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS ws
         |           FROM documents),

@@ -51,7 +51,7 @@ import graft.functions.GraftFunctions.poly_hash
   * At 100 TB: training is one map + a 1024-key aggregate, scoring is
   * a map over the corpus — the exact shape a gate pass should be.
   */
-object TextQueries6 {
+object TextQueries6 extends graft.QueryModule {
 
   /** Hashing-trick bucket count (fastText-style; 2^10 keeps the weight
     * table broadcast-trivial while exceeding this corpus' vocabulary).
@@ -179,7 +179,7 @@ object TextQueries6 {
       .stripMargin
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "text_quality_train" -> { (s, dir) => bucketStats(s, dir) },
 
     "text_quality_clf" -> { (s, dir) =>
@@ -235,7 +235,7 @@ object TextQueries6 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "text_quality_train" ->
       s"""WITH $trainedCtes
          |SELECT bucket, en_b, non_b, w_num FROM gw_wq""".stripMargin,

@@ -31,9 +31,9 @@ import graft.Tables
   * parallelism (weights via the session model cache); the ladder is
   * one range exchange; the rollup has 10 groups with map-side partials.
   */
-object TextQueries7 {
+object TextQueries7 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // `text_chi2_features` — χ² FEATURE SELECTION (round 12): the top-20
     // tokens most associated with the en/non-en label by the classic
     // document-level 2×2 chi-square — the feature-selection step that
@@ -150,7 +150,7 @@ object TextQueries7 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "text_chi2_features" ->
       """WITH td AS (SELECT lang, unnest(list_distinct(
         |    list_filter(string_split(text, ' '), gt -> gt <> ''))) AS tok

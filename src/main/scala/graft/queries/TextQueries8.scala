@@ -26,9 +26,9 @@ import graft.Tables
   * the two small frames. The growth ratio vocab_k / vocab_{k-1} is
   * one IEEE division on a ≤40-row frame.
   */
-object TextQueries8 {
+object TextQueries8 extends graft.QueryModule {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "text_heaps" -> { (s, dir) =>
       import s.implicits._
       val docs = Tables.load(s, dir, "documents")
@@ -64,7 +64,7 @@ object TextQueries8 {
     }
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Seq[(String, String)] = Seq(
     "text_heaps" ->
       """WITH docs AS (SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok

@@ -92,22 +92,34 @@ class ReleaseSpec extends SparkSpec {
     GraftSession.invalidateModels()
   }
 
-  test("cachedArtifact temp dirs survive release() but are DELETED by invalidateModels (ADVICE r18)") {
+  test("no-root artifacts survive release() but not invalidateModels") {
     GraftSession.invalidateModels()
+    assert(GraftSession.indexRoot(spark).isEmpty, "spec needs no configured index root")
+    // a real data dir: the no-root path fingerprints it like a deployment
+    val data = java.nio.file.Files.createTempDirectory("graft_rs_data")
+    java.nio.file.Files.writeString(data.resolve("part-0.txt"), "row")
     var builds = 0
-    def get() = GraftSession.cachedArtifact("rs-artifact", "/tmp/a") { p =>
+    def get() = GraftSession.pinnedArtifact(spark, "rs-artifact", data.toString,
+      Seq("kind" -> "test")) { p =>
       builds += 1
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(p, "part.txt"), "x")
     }
     val path = get()
     assert(get() == path && builds == 1)
+    // the same staged/params-pinned layout a configured root gets
+    val dir = java.nio.file.Paths.get(path)
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    assert(tmp.relativize(dir).toString
+      .matches("graft_art_session[^/]*/rs-artifact/src=[0-9a-f]{16}"),
+      s"no-root artifact landed at $path")
+    assert(java.nio.file.Files.exists(dir.resolve("_artifact_params")))
     GraftSession.release(spark)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(path)),
+    assert(java.nio.file.Files.exists(dir),
       "release() must not touch artifact dirs (disk, not executor storage)")
     GraftSession.invalidateModels()
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path)),
-      "invalidateModels must delete the orphaned artifact dir, not just the memo")
+    assert(!java.nio.file.Files.exists(dir),
+      "invalidateModels must delete the session artifact root, not just the memo")
     val path2 = get()
     assert(builds == 2 && path2 != path)
     GraftSession.invalidateModels()
